@@ -30,34 +30,40 @@ LSH/text (q210/q211/q221/q222) and IVF/embedding (q55/q73/q215/q223).
 from __future__ import annotations
 
 import os
-import re
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_entregas_pyspark_spark.queries.registry import REGISTRY, register
-from etl_entregas_pyspark_spark.queries.relational import T
+from etl_entregas_pyspark_spark.queries.relational import T, store_path
 from etl_entregas_pyspark_spark.streaming.epoch_store import EpochStore
 from etl_entregas_pyspark_spark.queries.similarity import (
     _IVF_TOPK,
     _NPROBE,
+    batch_queries,
+    brute_truth,
+    corpus_slice,
+    cosine,
+    cosine_topk,
     dot,
+    float_pull,
     ivf_assign,
     ivf_centroids,
+    open_buckets,
+    probe_batch,
     q8_codes,
-    sq_norm,
+    query_slice,
+    query_vectors,
+    recall_hits,
+    rescore_topk,
+    shortlist_rescore,
+    shortlist_sweep,
+    topk,
 )
 
 # test hook: (re)build count per index path — probes must never rebuild
 IVF_INDEX_BUILDS: dict[str, int] = {}
-
-
-def _ivf_index_path(spark: SparkSession, sf_dir: str) -> str:
-    app_id = re.sub(r"[^A-Za-z0-9_]", "_", spark.sparkContext.applicationId)
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"ivf_index_{app_id}_{tag}")
 
 
 def ensure_ivf_index(
@@ -76,7 +82,7 @@ def ensure_ivf_index(
     Idempotent per (session, sf_dir): gated on the candidate table's
     _SUCCESS marker, written LAST so a half-built index is rebuilt,
     never probed."""
-    path = _ivf_index_path(spark, sf_dir)
+    path = store_path(spark, sf_dir, "ivf_index")
     if not force and os.path.exists(
         os.path.join(path, "cand", "_SUCCESS")
     ):
@@ -85,7 +91,7 @@ def ensure_ivf_index(
     cent = ivf_centroids(e)
     cent.write.mode("overwrite").parquet(os.path.join(path, "centroids"))
     (
-        ivf_assign(e.filter(F.col("vec_id") >= 16), cent, keep=1)
+        ivf_assign(corpus_slice(e), cent, keep=1)
         .drop("d2")
         .withColumn(
             "codes",
@@ -126,42 +132,11 @@ def q223_ivf_probe_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = ensure_ivf_index(spark, sf_dir)
     cent = spark.read.parquet(os.path.join(idx, "centroids"))
     e = T(spark, sf_dir, "embeddings")
-    probes = (
-        ivf_assign(
-            e.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16)),
-            cent,
-            _NPROBE,
-        )
-        .drop("d2")
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            "centroid_id",
-        )
-        .localCheckpoint()
-    )
-    # <= C-row model-state pull: which inverted lists to open
-    buckets = [
-        r["centroid_id"]
-        for r in probes.select("centroid_id").distinct().collect()
-    ]
+    probes = probe_batch(e, cent, _NPROBE).localCheckpoint()
     cand = spark.read.parquet(os.path.join(idx, "cand")).filter(
-        F.col("centroid_id").isin(buckets)
+        open_buckets(probes)
     )
-    cos = dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt(sq_norm(F.col("q_emb"))) * F.sqrt(sq_norm(F.col("embedding")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        cand.join(F.broadcast(probes), "centroid_id")
-        .select(
-            "query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine")
-        )
-        .select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= _IVF_TOPK)
-    )
+    return cosine_topk(cand.join(F.broadcast(probes), "centroid_id"), _IVF_TOPK)
 
 
 # ---------------------------------------------------------------------------
@@ -173,12 +148,6 @@ def q223_ivf_probe_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
 _VEC_BATCH_MOD = 5  # corpus vec_id % 5 == 0 plays the arriving batch
 
 IVF_MEMBER_COLS = ["vec_id", "centroid_id"]  # the skinny membership schema
-
-
-def _ivf_store_path(spark: SparkSession, sf_dir: str) -> str:
-    app_id = re.sub(r"[^A-Za-z0-9_]", "_", spark.sparkContext.applicationId)
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"ivf_store_{app_id}_{tag}")
 
 
 def ensure_ivf_commit(spark: SparkSession, sf_dir: str) -> str:
@@ -194,7 +163,7 @@ def ensure_ivf_commit(spark: SparkSession, sf_dir: str) -> str:
     membership table is deliberately skinny — vectors live once in the
     base table; the index is WHICH list each one belongs to, which is
     what arrives, merges, and audits at 100 TB."""
-    path = _ivf_store_path(spark, sf_dir)
+    path = store_path(spark, sf_dir, "ivf_store")
     store = EpochStore(path, IVF_MEMBER_COLS)
     if store.pointer()["epoch"] >= 1:
         return path
@@ -202,7 +171,7 @@ def ensure_ivf_commit(spark: SparkSession, sf_dir: str) -> str:
         os.path.join(ensure_ivf_index(spark, sf_dir), "centroids")
     )
     e = T(spark, sf_dir, "embeddings")
-    corpus = e.filter(F.col("vec_id") >= 16)
+    corpus = corpus_slice(e)
     standing = corpus.filter(F.col("vec_id") % _VEC_BATCH_MOD != 0)
     store.seed(ivf_assign(standing, cent, keep=1))  # no-op if epoch 0 exists
     batch = corpus.filter(F.col("vec_id") % _VEC_BATCH_MOD == 0)
@@ -215,6 +184,7 @@ def ensure_ivf_commit(spark: SparkSession, sf_dir: str) -> str:
 from etl_entregas_pyspark_spark.queries.similarity import (  # noqa: E402
     _CAND_ASSIGN_SQL,
     _IVF_ASSIGN_SQL,
+    _PROBE_ASSIGN_SQL,
 )
 
 _ASSIGN_STANDING_SQL = _IVF_ASSIGN_SQL.replace(
@@ -320,8 +290,7 @@ def q225_ivf_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_buckets")
     )
     expected = (
-        T(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") >= 16)
+        corpus_slice(T(spark, sf_dir, "embeddings"))
         .select("vec_id", F.lit(True).alias("expected"))
     )
     status = (
@@ -419,12 +388,6 @@ def scrub_ivf_membership(
 _VEC_DENY_MOD = 13  # vec_id % 13 == 2 plays the forget-request set
 
 
-def _ivf_scrub_store_path(spark: SparkSession, sf_dir: str) -> str:
-    app_id = re.sub(r"[^A-Za-z0-9_]", "_", spark.sparkContext.applicationId)
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"ivf_scrub_store_{app_id}_{tag}")
-
-
 def ensure_scrubbed_ivf_store(spark: SparkSession, sf_dir: str) -> str:
     """Seed a dedicated membership store from q224's COMMITTED state
     (one skinny pointer-resolved scan — no re-assignment) and execute
@@ -432,7 +395,7 @@ def ensure_scrubbed_ivf_store(spark: SparkSession, sf_dir: str) -> str:
     shared commit store stays untouched (q224/q225 keep their
     contract); in production the scrub runs in place as scheduled
     maintenance."""
-    path = _ivf_scrub_store_path(spark, sf_dir)
+    path = store_path(spark, sf_dir, "ivf_scrub_store")
     store = EpochStore(path, IVF_MEMBER_COLS)
     if store.pointer().get("base_version") is not None:
         return path
@@ -559,12 +522,6 @@ def q227_ivf_deletion_propagation(
 _LIVE_VEC_EPOCHS = 3
 
 
-def _ivf_live_store_path(spark: SparkSession, sf_dir: str) -> str:
-    app_id = re.sub(r"[^A-Za-z0-9_]", "_", spark.sparkContext.applicationId)
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"ivf_live_store_{app_id}_{tag}")
-
-
 def ensure_live_ivf_membership(spark: SparkSession, sf_dir: str) -> str:
     """Build the corpus's IVF membership the LIVE way, once per
     (session, sf_dir): the corpus arrives in three vec_id-keyed epoch
@@ -573,14 +530,13 @@ def ensure_live_ivf_membership(spark: SparkSession, sf_dir: str) -> str:
     recovery — must fence to a no-op) and a ``compact_ivf_membership``
     after epoch 1 (so the final read unions a compacted base WITH a
     post-compaction epoch dir — the q222 replay shape for vectors)."""
-    path = _ivf_live_store_path(spark, sf_dir)
+    path = store_path(spark, sf_dir, "ivf_live_store")
     store = EpochStore(path, IVF_MEMBER_COLS)
     if store.pointer()["epoch"] >= _LIVE_VEC_EPOCHS - 1:
         return path
     cent_path = os.path.join(ensure_ivf_index(spark, sf_dir), "centroids")
     corpus = (
-        T(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") >= 16)
+        corpus_slice(T(spark, sf_dir, "embeddings"))
         .select("vec_id", "embedding")
     )
     sl = F.pmod(F.col("vec_id"), 3)
@@ -590,6 +546,22 @@ def ensure_live_ivf_membership(spark: SparkSession, sf_dir: str) -> str:
     compact_ivf_membership(spark, path)  # absorbs epochs 0-1 into base=v*
     ivf_membership_batch(corpus.filter(sl == 2), 2, path, cent_path)
     return path
+
+
+def _member_probe(spark: SparkSession, sf_dir: str, store_dir: str) -> DataFrame:
+    """q73's probe with the inverted lists read from a membership store
+    (q228 live, q229 scrubbed under ingest): the query batch assigned
+    against the persisted centroids, the membership restricted to the
+    probed lists, the member vectors joined back by id, cosine top-k."""
+    cent = spark.read.parquet(
+        os.path.join(ensure_ivf_index(spark, sf_dir), "centroids")
+    )
+    e = T(spark, sf_dir, "embeddings")
+    probes = probe_batch(e, cent, _NPROBE).localCheckpoint()
+    opened = open_buckets(probes)
+    members = EpochStore(store_dir, IVF_MEMBER_COLS).read(spark).filter(opened)
+    cand = members.join(e.select("vec_id", "embedding"), "vec_id")
+    return cosine_topk(cand.join(F.broadcast(probes), "centroid_id"), _IVF_TOPK)
 
 
 @register(
@@ -619,50 +591,7 @@ def ensure_live_ivf_membership(spark: SparkSession, sf_dir: str) -> str:
     "table plus an id-keyed pull of just those members' vectors.",
 )
 def q228_live_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    store_dir = ensure_live_ivf_membership(spark, sf_dir)
-    cent = spark.read.parquet(
-        os.path.join(ensure_ivf_index(spark, sf_dir), "centroids")
-    )
-    e = T(spark, sf_dir, "embeddings")
-    probes = (
-        ivf_assign(
-            e.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16)),
-            cent,
-            _NPROBE,
-        )
-        .drop("d2")
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            "centroid_id",
-        )
-        .localCheckpoint()
-    )
-    # <= C-row model-state pull: which inverted lists to open
-    buckets = [
-        r["centroid_id"]
-        for r in probes.select("centroid_id").distinct().collect()
-    ]
-    members = (
-        EpochStore(store_dir, IVF_MEMBER_COLS)
-        .read(spark)
-        .filter(F.col("centroid_id").isin(buckets))
-    )
-    cand = members.join(e.select("vec_id", "embedding"), "vec_id")
-    cos = dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt(sq_norm(F.col("q_emb"))) * F.sqrt(sq_norm(F.col("embedding")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        cand.join(F.broadcast(probes), "centroid_id")
-        .select(
-            "query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine")
-        )
-        .select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= _IVF_TOPK)
-    )
+    return _member_probe(spark, sf_dir, ensure_live_ivf_membership(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -677,14 +606,6 @@ def q228_live_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _ivf_govlive_store_path(spark: SparkSession, sf_dir: str) -> str:
-    app_id = re.sub(r"[^A-Za-z0-9_]", "_", spark.sparkContext.applicationId)
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", sf_dir.rstrip("/"))
-    return os.path.join(
-        tempfile.gettempdir(), f"ivf_govlive_store_{app_id}_{tag}"
-    )
-
-
 def ensure_govlive_ivf_membership(spark: SparkSession, sf_dir: str) -> str:
     """Build the membership store through the FULL lifecycle interleaving,
     once per (session, sf_dir): two ingest epochs land, a deletion request
@@ -696,14 +617,13 @@ def ensure_govlive_ivf_membership(spark: SparkSession, sf_dir: str) -> str:
     committed read therefore unions a scrubbed base with a post-scrub
     epoch directory — the one layout shape q228's replay (compact between
     epochs) does not produce."""
-    path = _ivf_govlive_store_path(spark, sf_dir)
+    path = store_path(spark, sf_dir, "ivf_govlive_store")
     store = EpochStore(path, IVF_MEMBER_COLS)
     if store.pointer()["epoch"] >= 2:
         return path
     cent_path = os.path.join(ensure_ivf_index(spark, sf_dir), "centroids")
     corpus = (
-        T(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") >= 16)
+        corpus_slice(T(spark, sf_dir, "embeddings"))
         .select("vec_id", "embedding")
     )
     deny = (
@@ -730,10 +650,6 @@ _CAND_ASSIGN_GOV_SQL = _IVF_ASSIGN_SQL.replace(
     f" AND vec_id % {_VEC_DENY_MOD} <> 2)",
 )
 
-_PROBE_ASSIGN_Q229_SQL = _IVF_ASSIGN_SQL.replace(
-    "{SRC}", "(SELECT * FROM embeddings WHERE vec_id >= 8 AND vec_id < 16)"
-)
-
 
 @register(
     "q229_ivf_scrub_under_ingest",
@@ -747,7 +663,7 @@ _PROBE_ASSIGN_Q229_SQL = _IVF_ASSIGN_SQL.replace(
         ) WHERE rn = 1
     ), probes AS (
         SELECT vec_id AS query_id, embedding AS q_emb, centroid_id FROM (
-            {_PROBE_ASSIGN_Q229_SQL}
+            {_PROBE_ASSIGN_SQL}
         ) WHERE rn <= {_NPROBE}
     ), scored AS (
         SELECT p.query_id, c.vec_id AS neighbor_id,
@@ -782,50 +698,7 @@ _PROBE_ASSIGN_Q229_SQL = _IVF_ASSIGN_SQL.replace(
     "never read during maintenance.",
 )
 def q229_ivf_scrub_under_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    store_dir = ensure_govlive_ivf_membership(spark, sf_dir)
-    cent = spark.read.parquet(
-        os.path.join(ensure_ivf_index(spark, sf_dir), "centroids")
-    )
-    e = T(spark, sf_dir, "embeddings")
-    probes = (
-        ivf_assign(
-            e.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16)),
-            cent,
-            _NPROBE,
-        )
-        .drop("d2")
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            "centroid_id",
-        )
-        .localCheckpoint()
-    )
-    # <= C-row model-state pull: which inverted lists to open
-    buckets = [
-        r["centroid_id"]
-        for r in probes.select("centroid_id").distinct().collect()
-    ]
-    members = (
-        EpochStore(store_dir, IVF_MEMBER_COLS)
-        .read(spark)
-        .filter(F.col("centroid_id").isin(buckets))
-    )
-    cand = members.join(e.select("vec_id", "embedding"), "vec_id")
-    cos = dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt(sq_norm(F.col("q_emb"))) * F.sqrt(sq_norm(F.col("embedding")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        cand.join(F.broadcast(probes), "centroid_id")
-        .select(
-            "query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine")
-        )
-        .select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= _IVF_TOPK)
-    )
+    return _member_probe(spark, sf_dir, ensure_govlive_ivf_membership(spark, sf_dir))
 
 
 # -- q230: the nprobe recall/cost sweep --------------------------------------
@@ -846,7 +719,7 @@ _SWEEP_NPROBES = [1, 2, 4, 8]  # C = 8 centroids: up to the exhaustive probe
     ), probes AS (
         SELECT vec_id AS query_id, embedding AS q_emb, centroid_id,
                rn AS pr FROM (
-            {_PROBE_ASSIGN_Q229_SQL}
+            {_PROBE_ASSIGN_SQL}
         ) WHERE rn <= 8
     ), levels AS (
         SELECT * FROM (VALUES (1), (2), (4), (8)) AS t(nprobe)
@@ -921,23 +794,9 @@ def q230_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = ensure_ivf_index(spark, sf_dir)
     cent = spark.read.parquet(os.path.join(idx, "centroids"))
     e = T(spark, sf_dir, "embeddings")
-    queries = e.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16))
-    # probe ranks 1..8 per query (keep d2 ordering as pr via re-rank)
-    wq = Window.partitionBy("vec_id").orderBy(F.col("d2"), F.col("centroid_id"))
-    probes = (
-        ivf_assign(queries, cent, keep=8)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            "centroid_id",
-            F.row_number().over(wq).alias("pr"),
-        )
-        .localCheckpoint()
-    )
+    # probe ranks 1..8 per query: one assignment serves every level
+    probes = probe_batch(e, cent, 8, rank="pr").localCheckpoint()
     cand = spark.read.parquet(os.path.join(idx, "cand"))
-    cos = dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt(sq_norm(F.col("q_emb"))) * F.sqrt(sq_norm(F.col("embedding")))
-    )
     # ONE candidate scan fans out to every level: the level fan-out is an
     # explode of a 4-literal array (a narrow op — no join, no shuffle),
     # and the resulting |queries| × C × 4-row frame broadcasts
@@ -953,42 +812,18 @@ def q230_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         "nprobe",
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
-        cos.alias("cosine"),
+        cosine().alias("cosine"),
     )
-    wa = Window.partitionBy("nprobe", "query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    approx = (
-        scored.select("*", F.row_number().over(wa).alias("rank"))
-        .filter(F.col("rank") <= _IVF_TOPK)
-        .select("nprobe", "query_id", "neighbor_id")
+    approx = topk(scored, _IVF_TOPK, by=("nprobe", "query_id")).select(
+        "nprobe", "query_id", "neighbor_id"
     )
     # ground truth: brute-force top-k (q51's scan), queries broadcast
-    corpus = e.filter(F.col("vec_id") >= 16).select("vec_id", "embedding")
-    bq = queries.select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    wb = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    brute = (
-        corpus.crossJoin(F.broadcast(bq))
-        .select(
-            "query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine")
-        )
-        .select("*", F.row_number().over(wb).alias("rank"))
-        .filter(F.col("rank") <= _IVF_TOPK)
-        .select("query_id", "neighbor_id", F.lit(True).alias("is_true"))
-    )
+    brute = brute_truth(corpus_slice(e), query_vectors(e), _IVF_TOPK)
     costs = scored.groupBy("nprobe").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_candidates"),
         F.countDistinct("query_id").cast("bigint").alias("n_queries"),
     )
-    hits = (
-        approx.join(F.broadcast(brute), ["query_id", "neighbor_id"], "left")
-        .groupBy("nprobe")
-        .agg(F.count("is_true").cast("bigint").alias("hits"))
-    )
+    hits = recall_hits(approx, brute, "nprobe")
     return (
         costs.join(hits, "nprobe")
         .select(
@@ -1210,10 +1045,7 @@ def q231_ivf_centroid_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -- q232: SQ8 quantized candidate scan + exact rescore -----------------------
 
-from etl_entregas_pyspark_spark.queries.similarity import (  # noqa: E402
-    _PROBE_ASSIGN_SQL,
-    _q8_sql,
-)
+from etl_entregas_pyspark_spark.queries.similarity import _q8_sql  # noqa: E402
 
 _SQ8_SHORTLIST = 8  # quantized-scan survivors per query (> _IVF_TOPK)
 
@@ -1238,16 +1070,11 @@ def _sq8_admission(
     cent = spark.read.parquet(os.path.join(idx, "centroids"))
     e = T(spark, sf_dir, "embeddings")
     probes = (
-        ivf_assign(
-            e.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16)),
-            cent,
-            keep=_NPROBE,
-        )
-        .drop("d2")
+        probe_batch(e, cent, _NPROBE)
         .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            q8_codes(F.col("embedding")).alias("q8_q"),
+            "query_id",
+            "q_emb",
+            q8_codes(F.col("q_emb")).alias("q8_q"),
             "centroid_id",
         )
         .localCheckpoint()
@@ -1262,23 +1089,31 @@ def _sq8_admission(
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
-    ws = Window.partitionBy("query_id").orderBy(
-        F.col("q8_dot").desc(), F.col("neighbor_id")
-    )
-    shortpool = (
+    shortpool = topk(
         cand_codes.join(
             F.broadcast(probes.select("query_id", "q8_q", "centroid_id")),
             "centroid_id",
-        )
-        .select(
+        ).select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
             q8_dot.alias("q8_dot"),
-        )
-        .select("*", F.row_number().over(ws).alias("srn"))
-        .filter(F.col("srn") <= depth)
+        ),
+        depth,
+        score="q8_dot",
+        rank="srn",
     )
     return probes, shortpool
+
+
+def _sq8_pull(e: DataFrame, probes: DataFrame, short: DataFrame) -> DataFrame:
+    """Floats page in ONLY for the <= shortlist x |queries| SQ8
+    survivors: query vectors ride onto the skinny shortlist from the
+    probe frame, and it BROADCASTS into the embeddings scan (the corpus
+    side must stream, never shuffle)."""
+    short_q = short.join(F.broadcast(batch_queries(probes)), "query_id")
+    return e.select(F.col("vec_id").alias("neighbor_id"), "embedding").join(
+        F.broadcast(short_q), "neighbor_id"
+    )
 
 
 @register(
@@ -1351,29 +1186,7 @@ def q232_ivf_sq8_rescore(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = T(spark, sf_dir, "embeddings")
     # ADMISSION: the shared codes-only stage (plan-testable helper)
     probes, short = _sq8_admission(spark, sf_dir, _SQ8_SHORTLIST)
-    # full-precision rescore: floats page in ONLY for the <= shortlist x
-    # |queries| survivors — the skinny shortlist BROADCASTS into the
-    # embeddings scan (the corpus side must stream, never shuffle) and
-    # query vectors ride along from the probe frame
-    short_q = short.join(
-        F.broadcast(probes.select("query_id", "q_emb").dropDuplicates(["query_id"])),
-        "query_id",
-    )
-    resc = e.select(F.col("vec_id").alias("neighbor_id"), "embedding").join(
-        F.broadcast(short_q), "neighbor_id"
-    )
-    cos = dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt(sq_norm(F.col("q_emb"))) * F.sqrt(sq_norm(F.col("embedding")))
-    )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        resc.select("query_id", "neighbor_id", "q8_dot", cos.alias("cosine"))
-        .select("*", F.row_number().over(wr).alias("rank"))
-        .filter(F.col("rank") <= _IVF_TOPK)
-        .orderBy("query_id", "rank")
-    )
+    return rescore_topk(_sq8_pull(e, probes, short), "q8_dot", _IVF_TOPK)
 
 
 # -- q234: centroid refresh APPLY — rebuild the inverted file and probe it ----
@@ -1389,12 +1202,6 @@ _REFRESH_ASSIGN_SQL = """
 """
 
 
-def _ivf_refresh_index_path(spark: SparkSession, sf_dir: str) -> str:
-    app_id = re.sub(r"[^A-Za-z0-9_]", "_", spark.sparkContext.applicationId)
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"ivf_refresh_{app_id}_{tag}")
-
-
 def ensure_refreshed_ivf_index(
     spark: SparkSession, sf_dir: str, force: bool = False
 ) -> str:
@@ -1404,7 +1211,7 @@ def ensure_refreshed_ivf_index(
     coordinates are persisted as exact doubles, and the re-assignment
     reads them BACK from the persisted model state — the probe and the
     build see the same bits."""
-    path = _ivf_refresh_index_path(spark, sf_dir)
+    path = store_path(spark, sf_dir, "ivf_refresh")
     if not force and os.path.exists(
         os.path.join(path, "cand", "_SUCCESS")
     ):
@@ -1414,7 +1221,7 @@ def ensure_refreshed_ivf_index(
     )
     newcent.write.mode("overwrite").parquet(os.path.join(path, "centroids"))
     cent = spark.read.parquet(os.path.join(path, "centroids"))
-    corpus = T(spark, sf_dir, "embeddings").filter(F.col("vec_id") >= 16)
+    corpus = corpus_slice(T(spark, sf_dir, "embeddings"))
     (
         ivf_assign(corpus, cent, keep=1)
         .drop("d2")
@@ -1493,35 +1300,11 @@ def q234_ivf_refresh_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = ensure_refreshed_ivf_index(spark, sf_dir)
     cent = spark.read.parquet(os.path.join(idx, "centroids"))
     e = T(spark, sf_dir, "embeddings")
-    probes = (
-        ivf_assign(
-            e.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16)),
-            cent,
-            keep=_NPROBE,
-        )
-        .drop("d2")
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            "centroid_id",
-        )
-    )
+    probes = probe_batch(e, cent, _NPROBE)
     cand = spark.read.parquet(os.path.join(idx, "cand"))
-    cos = dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt(sq_norm(F.col("q_emb"))) * F.sqrt(sq_norm(F.col("embedding")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        cand.join(F.broadcast(probes), "centroid_id")
-        .select(
-            "query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine")
-        )
-        .select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= _IVF_TOPK)
-        .orderBy("query_id", "rank")
-    )
+    return cosine_topk(
+        cand.join(F.broadcast(probes), "centroid_id"), _IVF_TOPK
+    ).orderBy("query_id", "rank")
 
 
 # -- q236: SQ8 shortlist-depth sweep — recall/cost per rescore budget ---------
@@ -1613,80 +1396,26 @@ def q236_sq8_shortlist_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = T(spark, sf_dir, "embeddings")
     # ADMISSION arm — q232's shared codes-only stage at the max budget
     probes, shortpool = _sq8_admission(spark, sf_dir, max(_SQ8_SWEEP_DEPTHS))
-    cos = dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt(sq_norm(F.col("q_emb"))) * F.sqrt(sq_norm(F.col("embedding")))
-    )
-    # rescore the max-depth pool once: floats broadcast-joined in for
-    # <= max(R) x |queries| rows; every smaller budget is a filter
-    short_q = shortpool.join(
-        F.broadcast(probes.select("query_id", "q_emb").dropDuplicates(["query_id"])),
-        "query_id",
-    )
+    # rescore the max-depth pool once; every smaller budget is a filter
     resc = (
-        e.select(F.col("vec_id").alias("neighbor_id"), "embedding")
-        .join(F.broadcast(short_q), "neighbor_id")
-        .select("query_id", "neighbor_id", "srn", cos.alias("cosine"))
+        _sq8_pull(e, probes, shortpool)
+        .select("query_id", "neighbor_id", "srn", cosine().alias("cosine"))
         .localCheckpoint()  # two consumers: cost aggregate + arank window
     )
     # TRUTH arm — the full-precision probed ranking (the audit's
     # necessary float scan, exactly q230's brute-leg contract): the
     # exact top-k set membership stands in for exact_rank <= k
-    we = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    truth = (
+    truth = cosine_topk(
         spark.read.parquet(os.path.join(idx, "cand"))
         .select("vec_id", "centroid_id", "embedding")
         .join(
             F.broadcast(probes.select("query_id", "q_emb", "centroid_id")),
             "centroid_id",
-        )
-        .select(
-            "query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine")
-        )
-        .select("*", F.row_number().over(we).alias("exact_rank"))
-        .filter(F.col("exact_rank") <= _IVF_TOPK)
-        .select("query_id", "neighbor_id", F.lit(True).alias("is_true"))
-    )
-    # one rescored frame fans out to every budget: a literal explode, no
-    # re-probe per level
-    fan = resc.withColumn(
-        "shortlist",
-        F.explode(F.array(*[F.lit(d) for d in _SQ8_SWEEP_DEPTHS])),
-    ).filter(F.col("srn") <= F.col("shortlist"))
-    # the cost axis: ACTUAL rescored rows per budget (r13 ADVICE #3)
-    cost = fan.groupBy("shortlist").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_rescored"),
-        F.countDistinct("query_id").cast("bigint").alias("n_queries"),
-    )
-    wa = Window.partitionBy("shortlist", "query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    approx = fan.select(
-        "shortlist",
-        "query_id",
-        "neighbor_id",
-        F.row_number().over(wa).alias("arank"),
-    ).filter(F.col("arank") <= _IVF_TOPK)
-    hits = (
-        approx.join(F.broadcast(truth), ["query_id", "neighbor_id"], "left")
-        .groupBy("shortlist")
-        .agg(F.count("is_true").cast("bigint").alias("hits"))
-    )
-    return (
-        cost.join(hits, "shortlist")
-        .select(
-            "shortlist",
-            "n_queries",
-            "n_rescored",
-            "hits",
-            (
-                F.col("hits").cast("double")
-                / (F.col("n_queries").cast("double") * F.lit(_IVF_TOPK))
-            ).alias("recall_at_k"),
-        )
-        .orderBy("shortlist")
-    )
+        ),
+        _IVF_TOPK,
+        rank="exact_rank",
+    ).select("query_id", "neighbor_id")
+    return shortlist_sweep(resc, truth, _SQ8_SWEEP_DEPTHS, _IVF_TOPK)
 
 
 # -- q238: the derived centroid-count plan — C = f(corpus) as model state ----
@@ -1771,12 +1500,6 @@ from etl_entregas_pyspark_spark.queries.similarity import (  # noqa: E402
 IVFPQ_INDEX_BUILDS: dict[str, int] = {}
 
 
-def _ivfpq_index_path(spark: SparkSession, sf_dir: str) -> str:
-    app_id = re.sub(r"[^A-Za-z0-9_]", "_", spark.sparkContext.applicationId)
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"ivfpq_index_{app_id}_{tag}")
-
-
 def _ivfpq_residuals(src: DataFrame, cent: DataFrame) -> DataFrame:
     """Residuals r = x − c(x) in ``_pq_subspaces``-sliceable form:
     (vec_id, centroid_id, embedding) where ``embedding`` IS the residual
@@ -1823,7 +1546,7 @@ def ensure_ivfpq_index(
 
     Gated on ``cand/_SUCCESS`` written LAST, so a half-built index is
     rebuilt, never probed (ensure_ivf_index's discipline)."""
-    path = _ivfpq_index_path(spark, sf_dir)
+    path = store_path(spark, sf_dir, "ivfpq_index")
     if not force and os.path.exists(os.path.join(path, "cand", "_SUCCESS")):
         return path
     e = T(spark, sf_dir, "embeddings")
@@ -1831,7 +1554,7 @@ def ensure_ivfpq_index(
     cent.write.mode("overwrite").parquet(os.path.join(path, "centroids"))
     # residuals feed BOTH the codebook and the encode pass
     resid = _ivfpq_residuals(
-        e.filter(F.col("vec_id") >= 16), cent
+        corpus_slice(e), cent
     ).localCheckpoint()
     (
         _pq_subspaces(
@@ -1920,26 +1643,20 @@ def _ivfpq_admission(
     cent = spark.read.parquet(os.path.join(idx, "centroids"))
     cb = spark.read.parquet(os.path.join(idx, "codebook"))
     e = T(spark, sf_dir, "embeddings")
-    qset = e.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16))
     probes = (
-        ivf_assign(qset, cent, _NPROBE)
-        .drop("d2")
+        probe_batch(e, cent, _NPROBE)
         .join(F.broadcast(cent), "centroid_id")
         .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
+            "query_id",
+            "q_emb",
             "centroid_id",
-            F.floor(dot(F.col("embedding"), F.col("c_emb")) * _PQ_SCALE)
+            F.floor(dot(F.col("q_emb"), F.col("c_emb")) * _PQ_SCALE)
             .cast("long")
             .alias("cdot"),
         )
         .localCheckpoint()  # consumers: bucket pull, scan join, rescore
     )
-    # <= C-row model-state pull: which inverted lists to open
-    buckets = [
-        r["centroid_id"]
-        for r in probes.select("centroid_id").distinct().collect()
-    ]
+    opened = open_buckets(probes)
     # per-query LUT over the residual codebook: exact subspace dots,
     # floor-scaled to ints (order-independent, engine-portable sums)
     pdot = F.floor(
@@ -1955,7 +1672,7 @@ def _ivfpq_admission(
         * _PQ_SCALE
     ).cast("long")
     lut = (
-        _pq_subspaces(qset, "query_id", "qsv")
+        _pq_subspaces(query_slice(e), "query_id", "qsv")
         .join(F.broadcast(cb), "m")
         .select("query_id", "m", F.col("k").alias("code"), pdot.alias("pdot"))
     )
@@ -1965,7 +1682,7 @@ def _ivfpq_admission(
         else cand_codes
     )
     codes_long = (
-        cand_src.filter(F.col("centroid_id").isin(buckets))
+        cand_src.filter(opened)
         .select(
             "vec_id",
             "centroid_id",
@@ -2121,44 +1838,11 @@ def q242_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ivfpq_finish(
     e: DataFrame, probes: DataFrame, scored: DataFrame
 ) -> DataFrame:
-    """Shortlist + exact rescore shared by q242 (bulk index) and q243
-    (live store): ADC top-``_PQ_SHORTLIST`` per query, floats joined
-    back for <= shortlist x |queries| rescore rows, cosine
-    top-``_IVF_TOPK``."""
-    ws = Window.partitionBy("query_id").orderBy(
-        F.col("adc").desc(), F.col("neighbor_id")
-    )
-    short = (
-        scored.select("*", F.row_number().over(ws).alias("srn"))
-        .filter(F.col("srn") <= _PQ_SHORTLIST)
-        .drop("srn")
-    )
-    # exact rescore over the shortlist only — floats page in for
-    # <= shortlist x |queries| rows
-    resc = (
-        e.filter(F.col("vec_id") >= 16)
-        .select(F.col("vec_id").alias("neighbor_id"), "embedding")
-        .join(F.broadcast(short), "neighbor_id")
-        .join(
-            F.broadcast(
-                probes.select("query_id", "q_emb").dropDuplicates(
-                    ["query_id"]
-                )
-            ),
-            "query_id",
-        )
-    )
-    cos = dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt(sq_norm(F.col("q_emb"))) * F.sqrt(sq_norm(F.col("embedding")))
-    )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        resc.select("query_id", "neighbor_id", "adc", cos.alias("cosine"))
-        .select("*", F.row_number().over(wr).alias("rank"))
-        .filter(F.col("rank") <= _IVF_TOPK)
-        .orderBy("query_id", "rank")
+    """Shortlist + exact rescore shared by the IVF-PQ probes (q242 bulk
+    index, q243/q245/q252 stores, q249 refreshed index): q240's refine
+    tail with the query vectors taken from the probe frame."""
+    return shortlist_rescore(
+        scored, corpus_slice(e), batch_queries(probes), _PQ_SHORTLIST, _IVF_TOPK
     )
 
 
@@ -2174,12 +1858,6 @@ def _ivfpq_finish(
 IVFPQ_CODE_COLS = ["vec_id", "centroid_id", "codes"]
 
 
-def _ivfpq_store_path(spark: SparkSession, sf_dir: str) -> str:
-    app_id = re.sub(r"[^A-Za-z0-9_]", "_", spark.sparkContext.applicationId)
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"ivfpq_store_{app_id}_{tag}")
-
-
 def ensure_ivfpq_commit(spark: SparkSession, sf_dir: str) -> str:
     """Build the epoch-fenced PQ codes store and commit one arriving
     batch into it, exactly once per (session, sf_dir).
@@ -2193,7 +1871,7 @@ def ensure_ivfpq_commit(spark: SparkSession, sf_dir: str) -> str:
     The standing corpus is never re-assigned or re-encoded: ingest is
     O(batch x C) assignment + O(batch x M x K) encode, FAISS's
     IVFPQ add() as a table commit."""
-    path = _ivfpq_store_path(spark, sf_dir)
+    path = store_path(spark, sf_dir, "ivfpq_store")
     store = EpochStore(path, IVFPQ_CODE_COLS)
     if store.pointer()["epoch"] >= 1:
         return path
@@ -2371,29 +2049,15 @@ def q244_ann_engine_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     e = T(spark, sf_dir, "embeddings")
-    corpus = e.filter(F.col("vec_id") >= 16)
-    qset = e.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16))
+    corpus = corpus_slice(e)
+    qset = query_slice(e)
     # truth arm: brute-force exact top-k
-    cos = dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt(sq_norm(F.col("q_emb"))) * F.sqrt(sq_norm(F.col("embedding")))
-    )
-    wt = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    truth = (
-        corpus.select(F.col("vec_id").alias("neighbor_id"), "embedding")
-        .crossJoin(
-            F.broadcast(
-                qset.select(
-                    F.col("vec_id").alias("query_id"),
-                    F.col("embedding").alias("q_emb"),
-                )
-            )
-        )
-        .select("query_id", "neighbor_id", cos.alias("cosine"))
-        .select("*", F.row_number().over(wt).alias("xr"))
-        .filter(F.col("xr") <= _IVF_TOPK)
-        .select("query_id", "neighbor_id", F.lit(True).alias("is_true"))
+    truth = brute_truth(
+        corpus.select(F.col("vec_id").alias("neighbor_id"), "embedding"),
+        query_vectors(e),
+        _IVF_TOPK,
+        rank="xr",
+        neighbor="neighbor_id",
     )
     engines = {
         "ivf_flat": q223_ivf_probe_persisted,
@@ -2407,11 +2071,7 @@ def q244_ann_engine_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(eng).alias("engine"), "query_id", "neighbor_id"
         )
         pairs = p if pairs is None else pairs.unionByName(p)
-    hits = (
-        pairs.join(F.broadcast(truth), ["query_id", "neighbor_id"], "left")
-        .groupBy("engine")
-        .agg(F.count("is_true").cast("bigint").alias("hits"))
-    )
+    hits = recall_hits(pairs, truth, "engine")
     # cost axes: probed-pair count (shared coarse quantizer, so one
     # count serves all three IVF engines) and the flat scan's full grid.
     # The corpus side reads (vec_id, centroid_id) from the PERSISTED
@@ -2483,21 +2143,13 @@ def q244_ann_engine_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _ivfpq_scrub_store_path(spark: SparkSession, sf_dir: str) -> str:
-    app_id = re.sub(r"[^A-Za-z0-9_]", "_", spark.sparkContext.applicationId)
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", sf_dir.rstrip("/"))
-    return os.path.join(
-        tempfile.gettempdir(), f"ivfpq_scrub_store_{app_id}_{tag}"
-    )
-
-
 def ensure_ivfpq_scrub(spark: SparkSession, sf_dir: str) -> str:
     """Seed a dedicated PQ codes store from q243's COMMITTED state and
     execute the deletion compaction on it, once per (session, sf_dir).
     EpochStore.scrub's filtered-compaction recipe: anti-join against the
     broadcast request set, rewrite as one base, swing the pointer last.
     The shared ingest store stays untouched (q243 keeps its contract)."""
-    path = _ivfpq_scrub_store_path(spark, sf_dir)
+    path = store_path(spark, sf_dir, "ivfpq_scrub_store")
     store = EpochStore(path, IVFPQ_CODE_COLS)
     if store.pointer().get("base_version") is not None:
         return path
@@ -2604,8 +2256,7 @@ def q246_semantic_decontamination(
     top = q223_ivf_probe_persisted(spark, sf_dir)
     flagged = top.select("neighbor_id").distinct()
     train = (
-        T(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") >= 16)
+        corpus_slice(T(spark, sf_dir, "embeddings"))
         .select("vec_id", "label")
     )
     joined = train.join(
@@ -2820,12 +2471,6 @@ def q248_ivfpq_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 IVFPQ_REFRESH_BUILDS: dict[str, int] = {}
 
 
-def _ivfpq_refresh_path(spark: SparkSession, sf_dir: str) -> str:
-    app_id = re.sub(r"[^A-Za-z0-9_]", "_", spark.sparkContext.applicationId)
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"ivfpq_refresh_{app_id}_{tag}")
-
-
 def ensure_refreshed_ivfpq_index(
     spark: SparkSession, sf_dir: str, force: bool = False
 ) -> str:
@@ -2844,7 +2489,7 @@ def ensure_refreshed_ivfpq_index(
     q231/q234's move; this closes the inner quantizer's loop.
     Gated on ``cand/_SUCCESS`` written LAST (a half-built refresh is
     rebuilt, never probed)."""
-    path = _ivfpq_refresh_path(spark, sf_dir)
+    path = store_path(spark, sf_dir, "ivfpq_refresh")
     if not force and os.path.exists(os.path.join(path, "cand", "_SUCCESS")):
         return path
     idx = ensure_ivfpq_index(spark, sf_dir)
@@ -3132,14 +2777,6 @@ def compact_ivfpq_codes(spark: SparkSession, store_dir: str) -> int:
     )
 
 
-def _ivfpq_live_store_path(spark: SparkSession, sf_dir: str) -> str:
-    app_id = re.sub(r"[^A-Za-z0-9_]", "_", spark.sparkContext.applicationId)
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", sf_dir.rstrip("/"))
-    return os.path.join(
-        tempfile.gettempdir(), f"ivfpq_live_store_{app_id}_{tag}"
-    )
-
-
 def ensure_live_ivfpq_codes(spark: SparkSession, sf_dir: str) -> str:
     """Build the corpus's PQ codes the LIVE way, once per (session,
     sf_dir): three vec_id-keyed epoch slices through
@@ -3148,14 +2785,13 @@ def ensure_live_ivfpq_codes(spark: SparkSession, sf_dir: str) -> str:
     ``compact_ivfpq_codes`` after epoch 1 (the final read unions a
     compacted base with a post-compaction epoch dir — exactly
     ``ensure_live_ivf_membership``'s replay shape, for codes)."""
-    path = _ivfpq_live_store_path(spark, sf_dir)
+    path = store_path(spark, sf_dir, "ivfpq_live_store")
     store = EpochStore(path, IVFPQ_CODE_COLS)
     if store.pointer()["epoch"] >= _LIVE_VEC_EPOCHS - 1:
         return path
     idx = ensure_ivfpq_index(spark, sf_dir)
     corpus = (
-        T(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") >= 16)
+        corpus_slice(T(spark, sf_dir, "embeddings"))
         .select("vec_id", "embedding")
     )
     sl = F.pmod(F.col("vec_id"), 3)
@@ -3212,8 +2848,9 @@ def q252_live_ivfpq_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # between sf0.01's full-precision footprint (~124 KB -> everything fits,
 # highest-fidelity engine wins) and sf0.1's (~496 KB -> full precision is
 # evicted, the codes engines compete) so the choice is live at BOTH gate
-# scales, and tools/ann_chooser_ladder.py shows it flipping again when
-# even int8 stops fitting.
+# scales; the SCALE.md engine-chooser ladder (its one-shot tool,
+# tools/ann_chooser_ladder.py, is in git history at 7299fde) shows it
+# flipping again when even int8 stops fitting.
 _ANN_BUDGET_BYTES = 200_000
 
 
@@ -3285,7 +2922,7 @@ def _q250_oracle() -> str:
     "arithmetic is pure integer products and one window over four "
     "model-state rows. As the corpus grows the choice flips exactly "
     "where the budget line crosses each footprint — "
-    "tools/ann_chooser_ladder.py measures the flip (flat at small n, "
+    "SCALE.md's engine-chooser ladder records the flip (flat at small n, "
     "codes engines as n x 64B crosses the budget, IVF-PQ once only "
     "4B/vec fits) — the SCALE.md-recorded inversion, now a decision "
     "rule instead of a chart.",
@@ -3293,7 +2930,7 @@ def _q250_oracle() -> str:
 def q250_ann_engine_choice(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = q244_ann_engine_matrix(spark, sf_dir)
     e = T(spark, sf_dir, "embeddings")
-    stats = e.filter(F.col("vec_id") >= 16).agg(
+    stats = corpus_slice(e).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_vectors"),
         F.max(F.size("embedding")).cast("bigint").alias("dim"),
     )
@@ -3469,28 +3106,11 @@ def _q253_oracle() -> str:
 def q253_ivfpq_shortlist_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = T(spark, sf_dir, "embeddings")
     probes, scored = _ivfpq_admission(spark, sf_dir)
-    ws = Window.partitionBy("query_id").orderBy(
-        F.col("adc").desc(), F.col("neighbor_id")
-    )
-    pool = (
-        scored.select("*", F.row_number().over(ws).alias("srn"))
-        .filter(F.col("srn") <= max(_SQ8_SWEEP_DEPTHS))
-    )
-    cos = dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt(sq_norm(F.col("q_emb"))) * F.sqrt(sq_norm(F.col("embedding")))
-    )
+    pool = topk(scored, max(_SQ8_SWEEP_DEPTHS), score="adc", rank="srn")
     # rescore the max-depth pool once; every smaller budget is a filter
     resc = (
-        e.filter(F.col("vec_id") >= 16)
-        .select(F.col("vec_id").alias("neighbor_id"), "embedding")
-        .join(F.broadcast(pool), "neighbor_id")
-        .join(
-            F.broadcast(
-                probes.select("query_id", "q_emb").dropDuplicates(["query_id"])
-            ),
-            "query_id",
-        )
-        .select("query_id", "neighbor_id", "srn", cos.alias("cosine"))
+        float_pull(corpus_slice(e), pool, batch_queries(probes))
+        .select("query_id", "neighbor_id", "srn", cosine().alias("cosine"))
         .localCheckpoint()  # two consumers: cost aggregate + arank window
     )
     # truth arm: full-precision PROBED ranking — membership from the
@@ -3499,58 +3119,15 @@ def q253_ivfpq_shortlist_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     member = spark.read.parquet(os.path.join(idx, "cand")).select(
         "vec_id", F.col("centroid_id").cast("long").alias("centroid_id")
     )
-    wt = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    truth = (
-        member.join(e.select("vec_id", "embedding"), "vec_id")
-        .join(
+    truth = cosine_topk(
+        member.join(e.select("vec_id", "embedding"), "vec_id").join(
             F.broadcast(probes.select("query_id", "q_emb", "centroid_id")),
             "centroid_id",
-        )
-        .select(
-            "query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine")
-        )
-        .select("*", F.row_number().over(wt).alias("xr"))
-        .filter(F.col("xr") <= _IVF_TOPK)
-        .select("query_id", "neighbor_id", F.lit(True).alias("is_true"))
-    )
-    fan = resc.withColumn(
-        "shortlist",
-        F.explode(F.array(*[F.lit(d) for d in _SQ8_SWEEP_DEPTHS])),
-    ).filter(F.col("srn") <= F.col("shortlist"))
-    cost = fan.groupBy("shortlist").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_rescored"),
-        F.countDistinct("query_id").cast("bigint").alias("n_queries"),
-    )
-    wa = Window.partitionBy("shortlist", "query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    approx = fan.select(
-        "shortlist",
-        "query_id",
-        "neighbor_id",
-        F.row_number().over(wa).alias("arank"),
-    ).filter(F.col("arank") <= _IVF_TOPK)
-    hits = (
-        approx.join(F.broadcast(truth), ["query_id", "neighbor_id"], "left")
-        .groupBy("shortlist")
-        .agg(F.count("is_true").cast("bigint").alias("hits"))
-    )
-    return (
-        cost.join(hits, "shortlist")
-        .select(
-            "shortlist",
-            "n_queries",
-            "n_rescored",
-            "hits",
-            (
-                F.col("hits").cast("double")
-                / (F.col("n_queries").cast("double") * F.lit(_IVF_TOPK))
-            ).alias("recall_at_k"),
-        )
-        .orderBy("shortlist")
-    )
+        ),
+        _IVF_TOPK,
+        rank="xr",
+    ).select("query_id", "neighbor_id")
+    return shortlist_sweep(resc, truth, _SQ8_SWEEP_DEPTHS, _IVF_TOPK)
 
 
 # -- q254: SQ8 scalar-quantizer drift audit — the range/clip instrument -----
@@ -3693,10 +3270,6 @@ def _q264_oracle() -> str:
         _MMR_POOL,
         _mmr_chain_ctes,
     )
-    from etl_entregas_pyspark_spark.queries.similarity import (
-        _PROBE_ASSIGN_SQL,
-    )
-
     cos_pc = _MMR_COS.format(a="p.q_emb", b="c.embedding")
     ctes = [
         """cent AS MATERIALIZED (
@@ -3756,44 +3329,22 @@ def _register_q264() -> None:
         idx = ensure_ivf_index(spark, sf_dir)
         cent = spark.read.parquet(os.path.join(idx, "centroids"))
         e = T(spark, sf_dir, "embeddings")
-        probes = (
-            ivf_assign(
-                e.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16)),
-                cent,
-                _NPROBE,
-            )
-            .drop("d2")
-            .select(
-                F.col("vec_id").alias("query_id"),
-                F.col("embedding").alias("q_emb"),
-                "centroid_id",
-            )
-            .localCheckpoint()
-        )
-        # <= C-row model-state pull: which inverted lists to open
-        buckets = [
-            r["centroid_id"]
-            for r in probes.select("centroid_id").distinct().collect()
-        ]
+        probes = probe_batch(e, cent, _NPROBE).localCheckpoint()
         cand = spark.read.parquet(os.path.join(idx, "cand")).filter(
-            F.col("centroid_id").isin(buckets)
-        )
-        rel = dot(F.col("q_emb"), F.col("embedding")) / (
-            F.sqrt(sq_norm(F.col("q_emb"))) * F.sqrt(sq_norm(F.col("embedding")))
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("rel").desc(), F.col("neighbor_id")
+            open_buckets(probes)
         )
         pool = (
-            cand.join(F.broadcast(probes), "centroid_id")
-            .select(
-                "query_id",
-                F.col("vec_id").alias("neighbor_id"),
-                rel.alias("rel"),
-                F.col("embedding").alias("c_emb"),
+            topk(
+                cand.join(F.broadcast(probes), "centroid_id").select(
+                    "query_id",
+                    F.col("vec_id").alias("neighbor_id"),
+                    cosine().alias("rel"),
+                    F.col("embedding").alias("c_emb"),
+                ),
+                _MMR_POOL,
+                score="rel",
+                rank="rn",
             )
-            .select("*", F.row_number().over(w).alias("rn"))
-            .filter(F.col("rn") <= _MMR_POOL)
             .drop("rn")
             .localCheckpoint()
         )

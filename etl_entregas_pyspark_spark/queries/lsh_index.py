@@ -47,14 +47,18 @@ surface for a standing 100-TB corpus with daily arrivals.
 from __future__ import annotations
 
 import os
-import re
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_entregas_pyspark_spark.queries.registry import register
-from etl_entregas_pyspark_spark.queries.relational import T, _rnd_sql, rnd, spread_if_narrow
+from etl_entregas_pyspark_spark.queries.relational import (
+    T,
+    _rnd_sql,
+    rnd,
+    spread_if_narrow,
+    store_path,
+)
 from etl_entregas_pyspark_spark.queries.similarity import (
     _A,
     _B,
@@ -76,17 +80,6 @@ from etl_entregas_pyspark_spark.queries.similarity import (
 INDEX_BUILDS: dict[str, int] = {}
 
 _INDEX_FILES = 8  # band-table files per index (test-scale; a config at prod)
-
-
-def _index_path(spark: SparkSession, sf_dir: str) -> str:
-    """Stable per-(session, sf_dir) location for the standing band index.
-
-    Keyed by application id (concurrent sessions don't clobber each
-    other) and the sf dir (one standing corpus per scale), same lifecycle
-    discipline as q150's ``_bucket_table``."""
-    app_id = re.sub(r"[^A-Za-z0-9_]", "_", spark.sparkContext.applicationId)
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"lsh_band_index_{app_id}_{tag}")
 
 
 def _minhash_aggs() -> list:
@@ -155,7 +148,7 @@ def ensure_band_index(
     keep hot. Idempotent per (session, sf_dir): the parquet _SUCCESS
     marker gates the rebuild, so every probe after the first is O(batch).
     """
-    path = _index_path(spark, sf_dir)
+    path = store_path(spark, sf_dir, "lsh_band_index")
     if not force and os.path.exists(os.path.join(path, "_SUCCESS")):
         return path
     corpus = T(spark, sf_dir, "documents").filter(
@@ -488,17 +481,6 @@ def q217_band_index_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _commit_store_path(spark: SparkSession, sf_dir: str) -> str:
-    """Per-(session, sf_dir) location for the ingest-committed index store
-    (epoch-fenced layout from streaming/upsert_sink.py, NOT the flat
-    batch table of ``ensure_band_index`` — the commit is an epoch)."""
-    app_id = re.sub(r"[^A-Za-z0-9_]", "_", spark.sparkContext.applicationId)
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", sf_dir.rstrip("/"))
-    return os.path.join(
-        tempfile.gettempdir(), f"lsh_commit_store_{app_id}_{tag}"
-    )
-
-
 def seed_index_store(
     spark: SparkSession, standing_index_path: str, index_dir: str
 ) -> None:
@@ -575,7 +557,7 @@ def q221_ingest_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     route = q211_ingest_apply(spark, sf_dir).localCheckpoint()
-    store = _commit_store_path(spark, sf_dir)
+    store = store_path(spark, sf_dir, "lsh_commit_store")
     seed_index_store(spark, ensure_band_index(spark, sf_dir), store)
     keepers = route.filter(F.col("action") == "keep").select("doc_id")
     keeper_docs = (
@@ -630,14 +612,6 @@ def q221_ingest_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LIVE_EPOCHS = 3
 
 
-def _live_store_path(spark: SparkSession, sf_dir: str) -> str:
-    app_id = re.sub(r"[^A-Za-z0-9_]", "_", spark.sparkContext.applicationId)
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", sf_dir.rstrip("/"))
-    return os.path.join(
-        tempfile.gettempdir(), f"lsh_live_store_{app_id}_{tag}"
-    )
-
-
 def ensure_live_band_index(spark: SparkSession, sf_dir: str) -> str:
     """Build the standing index the LIVE way, once per (session, sf_dir):
     the standing corpus arrives in three doc_id-keyed epoch slices
@@ -655,7 +629,7 @@ def ensure_live_band_index(spark: SparkSession, sf_dir: str) -> str:
         compact_band_index,
     )
 
-    path = _live_store_path(spark, sf_dir)
+    path = store_path(spark, sf_dir, "lsh_live_store")
     os.makedirs(path, exist_ok=True)
     if _read_pointer(path)["epoch"] >= _LIVE_EPOCHS - 1:
         return path
@@ -747,14 +721,6 @@ def scrub_band_index(
     )
 
 
-def _scrub_store_path(spark: SparkSession, sf_dir: str) -> str:
-    app_id = re.sub(r"[^A-Za-z0-9_]", "_", spark.sparkContext.applicationId)
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", sf_dir.rstrip("/"))
-    return os.path.join(
-        tempfile.gettempdir(), f"lsh_scrub_store_{app_id}_{tag}"
-    )
-
-
 def ensure_scrubbed_store(spark: SparkSession, sf_dir: str) -> str:
     """Seed a dedicated store from the batch-built index and execute the
     deletion compaction on it, once per (session, sf_dir). The shared
@@ -764,7 +730,7 @@ def ensure_scrubbed_store(spark: SparkSession, sf_dir: str) -> str:
         _read_pointer,
     )
 
-    path = _scrub_store_path(spark, sf_dir)
+    path = store_path(spark, sf_dir, "lsh_scrub_store")
     os.makedirs(path, exist_ok=True)
     if _read_pointer(path).get("base_version") is not None:
         return path
@@ -904,12 +870,6 @@ _REPLAN_BANDS = N_HASHES // _REPLAN_ROWS
 SIG_STORE_BUILDS: dict[str, int] = {}
 
 
-def _sig_store_path(spark: SparkSession, sf_dir: str) -> str:
-    app_id = re.sub(r"[^A-Za-z0-9_]", "_", spark.sparkContext.applicationId)
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"lsh_sig_store_{app_id}_{tag}")
-
-
 def ensure_signature_store(
     spark: SparkSession, sf_dir: str, force: bool = False
 ) -> str:
@@ -920,7 +880,7 @@ def ensure_signature_store(
     re-shingle, no re-hash of the text. Docs with no shingles carry no
     signature (matching every banded oracle's len(sh) > 0 gate).
     Idempotent per (session, sf_dir) on the parquet _SUCCESS marker."""
-    path = _sig_store_path(spark, sf_dir)
+    path = store_path(spark, sf_dir, "lsh_sig_store")
     if not force and os.path.exists(os.path.join(path, "_SUCCESS")):
         return path
     # the corpus parquet is a single input split at bench scale (one row

@@ -16,6 +16,9 @@ on the DuckDB oracle alike.
 
 from __future__ import annotations
 
+import os
+import re
+import tempfile
 from itertools import chain
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -27,6 +30,16 @@ from etl_entregas_pyspark_spark.queries.registry import register
 
 def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def store_path(spark: SparkSession, sf_dir: str, kind: str) -> str:
+    """Stable per-(session, sf_dir) location of a persisted ``kind`` store
+    (the LSH band index, the IVF inverted files and their epoch stores).
+    Keyed by application id, so concurrent sessions don't clobber each
+    other, and by the sf dir: one standing corpus per scale."""
+    app_id = re.sub(r"[^A-Za-z0-9_]", "_", spark.sparkContext.applicationId)
+    tag = re.sub(r"[^A-Za-z0-9_]", "_", sf_dir.rstrip("/"))
+    return os.path.join(tempfile.gettempdir(), f"{kind}_{app_id}_{tag}")
 
 
 def spread_if_narrow(df: DataFrame, *keys: str, target: int | None = None) -> DataFrame:

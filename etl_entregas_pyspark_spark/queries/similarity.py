@@ -781,6 +781,209 @@ def ivf_assign(src: DataFrame, cent: DataFrame, keep: int = 1) -> DataFrame:
     )
 
 
+# ---------------------------------------------------------------------------
+# The vector family's shared probe conventions. Every IVF/PQ query (q73's
+# recompute, q223's persisted and q228's live probe, their audits and
+# sweeps) slices, probes, scores, ranks and audits through these, so the
+# query and corpus slice, the exact-doubles cosine, the top-k tie-break and
+# the brute-force truth arm each live in one place. Each query keeps only
+# its policy: which store it reads, whether it prunes to the probed
+# buckets, and its pool or shortlist depth.
+# ---------------------------------------------------------------------------
+
+
+def query_slice(e: DataFrame) -> DataFrame:
+    """The query batch: vec_id 8..15 (the oracles' ``vec_id >= 8 AND
+    vec_id < 16``; ids below 8 seed the centroids)."""
+    return e.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16))
+
+
+def corpus_slice(e: DataFrame) -> DataFrame:
+    """The searched corpus: vec_id >= 16 (disjoint from centroid seeds
+    and queries)."""
+    return e.filter(F.col("vec_id") >= 16)
+
+
+def query_vectors(e: DataFrame) -> DataFrame:
+    """The query slice as (query_id, q_emb), for plans that score every
+    query without probing (flat scans and brute-force truth arms)."""
+    return query_slice(e).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
+    )
+
+
+def probe_batch(
+    e: DataFrame, cent: DataFrame, keep: int, rank: str | None = None
+) -> DataFrame:
+    """The query slice assigned to its ``keep`` nearest centroids, one
+    probe row per (query, centroid): (query_id, q_emb, centroid_id).
+    ``rank`` adds a column of that name holding each probe's nearness
+    rank (1 = nearest), so one assignment serves every nprobe level."""
+    assigned = ivf_assign(query_slice(e), cent, keep)
+    cols = [
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_emb"),
+        "centroid_id",
+    ]
+    if rank is None:
+        return assigned.drop("d2").select(*cols)
+    w = Window.partitionBy("vec_id").orderBy(F.col("d2"), F.col("centroid_id"))
+    return assigned.select(*cols, F.row_number().over(w).alias(rank))
+
+
+def open_buckets(probes: DataFrame) -> Column:
+    """The predicate that opens only the probed inverted lists: a <= C-row
+    model-state pull of the distinct bucket ids, so a partitioned store
+    scan prunes to those ``centroid_id=`` partitions. Runs one job."""
+    ids = [
+        r["centroid_id"]
+        for r in probes.select("centroid_id").distinct().collect()
+    ]
+    return F.col("centroid_id").isin(ids)
+
+
+def batch_queries(probes: DataFrame) -> DataFrame:
+    """One (query_id, q_emb) row per query of a probe frame."""
+    return probes.select("query_id", "q_emb").dropDuplicates(["query_id"])
+
+
+def cosine() -> Column:
+    """Exact-doubles cosine of ``q_emb`` and ``embedding``: float32
+    products folded sequentially, so it is bit-identical to the oracles'
+    ``list_sum`` form."""
+    q, c = F.col("q_emb"), F.col("embedding")
+    return dot(q, c) / (F.sqrt(sq_norm(q)) * F.sqrt(sq_norm(c)))
+
+
+def topk(
+    df: DataFrame,
+    k: int,
+    by: tuple[str, ...] = ("query_id",),
+    score: str = "cosine",
+    rank: str = "rank",
+) -> DataFrame:
+    """The ``k`` best rows per ``by`` group by ``score`` descending, ties
+    broken by neighbor_id ascending; ``rank`` names the 1-based rank
+    column. A group with fewer than ``k`` rows keeps them all."""
+    w = Window.partitionBy(*by).orderBy(F.col(score).desc(), F.col("neighbor_id"))
+    return df.select("*", F.row_number().over(w).alias(rank)).filter(
+        F.col(rank) <= k
+    )
+
+
+def cosine_topk(
+    pairs: DataFrame, k: int, rank: str = "rank", neighbor: str = "vec_id"
+) -> DataFrame:
+    """Exact-cosine top-``k`` per query of candidate pairs carrying
+    query_id, q_emb, the candidate id in column ``neighbor`` and its
+    embedding: returns (query_id, neighbor_id, cosine, ``rank``)."""
+    scored = pairs.select(
+        "query_id", F.col(neighbor).alias("neighbor_id"), cosine().alias("cosine")
+    )
+    return topk(scored, k, rank=rank)
+
+
+def brute_truth(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    rank: str = "rank",
+    neighbor: str = "vec_id",
+) -> DataFrame:
+    """The brute-force ground truth every recall audit scores against:
+    ``queries`` (query_id, q_emb) broadcast into a full scan of
+    ``corpus``, exact-cosine top-``k`` per query as (query_id,
+    neighbor_id). ``neighbor`` is the corpus id column: ``neighbor_id``
+    where the caller keyed the corpus for its rescore join."""
+    pairs = corpus.crossJoin(F.broadcast(queries))
+    return cosine_topk(pairs, k, rank=rank, neighbor=neighbor).select(
+        "query_id", "neighbor_id"
+    )
+
+
+def recall_hits(approx: DataFrame, truth: DataFrame, by: str) -> DataFrame:
+    """Ground-truth hits per ``by`` group: the approximate (query_id,
+    neighbor_id) rows left-joined to the broadcast ``truth`` set."""
+    flagged = truth.select("query_id", "neighbor_id", F.lit(True).alias("is_true"))
+    return (
+        approx.join(F.broadcast(flagged), ["query_id", "neighbor_id"], "left")
+        .groupBy(by)
+        .agg(F.count("is_true").cast("bigint").alias("hits"))
+    )
+
+
+def float_pull(corpus: DataFrame, pool: DataFrame, queries: DataFrame) -> DataFrame:
+    """Page the floats back in for a shortlist ``pool`` (query_id,
+    neighbor_id, ...): the pool broadcasts into the ``corpus`` scan and
+    the query vectors (query_id, q_emb) broadcast onto it, so only
+    <= pool rows carry vectors."""
+    return (
+        corpus.select(F.col("vec_id").alias("neighbor_id"), "embedding")
+        .join(F.broadcast(pool), "neighbor_id")
+        .join(F.broadcast(queries), "query_id")
+    )
+
+
+def rescore_topk(resc: DataFrame, score: str, k: int) -> DataFrame:
+    """The refine tail: exact-cosine top-``k`` of a rescore frame
+    (query_id, neighbor_id, ``score``, q_emb, embedding), each row keeping
+    the quantized ``score`` that admitted it next to the cosine that
+    ranked it."""
+    return topk(
+        resc.select("query_id", "neighbor_id", score, cosine().alias("cosine")), k
+    ).orderBy("query_id", "rank")
+
+
+def shortlist_rescore(
+    scores: DataFrame, corpus: DataFrame, queries: DataFrame, depth: int, k: int
+) -> DataFrame:
+    """ADC shortlist + exact rescore (q240 flat PQ, q242's IVF-PQ family):
+    the top-``depth`` per query by ``adc``, floats pulled back for those
+    rows only, cosine top-``k``."""
+    short = topk(scores, depth, score="adc", rank="srn").drop("srn")
+    return rescore_topk(float_pull(corpus, short, queries), "adc", k)
+
+
+def shortlist_sweep(
+    resc: DataFrame, truth: DataFrame, depths: tuple[int, ...], k: int
+) -> DataFrame:
+    """Recall and cost per rescore budget (q236/q241/q253): ``resc``
+    (query_id, neighbor_id, srn, cosine) is the max-depth pool rescored
+    once, and each budget in ``depths`` is a filter over it (a literal
+    explode, no re-probe per level). n_rescored counts the ACTUAL fan rows
+    per budget, so a query whose buckets hold fewer than R candidates adds
+    what it rescored, not R. Each budget's cosine top-``k`` is scored
+    against the (query_id, neighbor_id) ``truth`` set."""
+    fan = resc.withColumn(
+        "shortlist",
+        F.explode(F.array(*[F.lit(d) for d in depths])),
+    ).filter(F.col("srn") <= F.col("shortlist"))
+    cost = fan.groupBy("shortlist").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_rescored"),
+        F.countDistinct("query_id").cast("bigint").alias("n_queries"),
+    )
+    approx = topk(
+        fan.select("shortlist", "query_id", "neighbor_id", "cosine"),
+        k,
+        by=("shortlist", "query_id"),
+        rank="arank",
+    )
+    return (
+        cost.join(recall_hits(approx, truth, "shortlist"), "shortlist")
+        .select(
+            "shortlist",
+            "n_queries",
+            "n_rescored",
+            "hits",
+            (
+                F.col("hits").cast("double")
+                / (F.col("n_queries").cast("double") * F.lit(k))
+            ).alias("recall_at_k"),
+        )
+        .orderBy("shortlist")
+    )
+
+
 @register(
     "q55_ivf_assign",
     """
@@ -946,27 +1149,10 @@ _PROBE_ASSIGN_SQL = _IVF_ASSIGN_SQL.replace(
 def q73_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = T(spark, sf_dir, "embeddings")
     cent = ivf_centroids(e)
-
-    def assign(src: DataFrame, keep: int) -> DataFrame:
-        return ivf_assign(src, cent, keep).drop("d2")
-
-    cand = assign(e.filter(F.col("vec_id") >= 16), 1)
-    probes = assign(e.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16)), _NPROBE).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        "centroid_id",
-    )
-    cos = dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt(sq_norm(F.col("q_emb"))) * F.sqrt(sq_norm(F.col("embedding")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
+    cand = ivf_assign(corpus_slice(e), cent, 1).drop("d2")
+    probes = probe_batch(e, cent, _NPROBE)
     # 16 probe rows broadcast into the bucketed candidate scan
-    return (
-        cand.join(F.broadcast(probes), "centroid_id")
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine"))
-        .select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= _IVF_TOPK)
-    )
+    return cosine_topk(cand.join(F.broadcast(probes), "centroid_id"), _IVF_TOPK)
 
 
 # ---------------------------------------------------------------------------
@@ -1651,11 +1837,26 @@ _SEMDEDUP_COS_SQL = """list_sum(list_transform(list_zip(a.embedding, b.embedding
                   * sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))))"""
 
 
-@register(
-    "q182_semdedup",
-    f"""
-    WITH cent AS (
-        SELECT vec_id AS centroid_id, embedding AS c_emb FROM embeddings WHERE vec_id < 8
+# q199/q200's derived centroid count: the IVF sqrt(n) rule as SQL model
+# state. CEIL(SQRT(n)) is portable — sqrt of an exactly-representable
+# bigint is correctly rounded on both engines, so the ceil agrees.
+_K_AUTO_SQL = (
+    "SELECT CAST(CEIL(SQRT(COUNT(*))) AS BIGINT) AS k_auto FROM embeddings"
+)
+
+
+def _semdedup_oracle(n_centroids: int | str, derived_k: bool = False) -> str:
+    """q182/q196/q199 oracle with a parametric centroid cutoff — the SQL
+    twin of ``semdedup_prune``, as ``_label_noise_oracle`` is for the
+    noise sweep. ``n_centroids`` is a literal (q182/q196) or a SQL
+    expression over the ``kval`` CTE (q199's derived K);
+    ``derived_k=True`` also emits the K every row was computed under."""
+    kval_cte = f"kval AS ({_K_AUTO_SQL}), " if derived_k else ""
+    k_col = ",\n           (SELECT k_auto FROM kval) AS derived_k" if derived_k else ""
+    return f"""
+    WITH {kval_cte}cent AS (
+        SELECT vec_id AS centroid_id, embedding AS c_emb FROM embeddings{', kval' if derived_k else ''}
+        WHERE vec_id < {n_centroids}
     ), assigned AS (
         SELECT vec_id, embedding, centroid_id FROM (
             {_IVF_ASSIGN_SQL.replace("{SRC}", "embeddings")}
@@ -1669,10 +1870,15 @@ _SEMDEDUP_COS_SQL = """list_sum(list_transform(list_zip(a.embedding, b.embedding
     SELECT a.centroid_id,
            CAST(COUNT(*) AS BIGINT) AS n_members,
            CAST(SUM(CASE WHEN d.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped,
-           CAST(SUM(CASE WHEN d.vec_id IS NULL THEN a.vec_id ELSE 0 END) AS BIGINT) AS kept_probe
+           CAST(SUM(CASE WHEN d.vec_id IS NULL THEN a.vec_id ELSE 0 END) AS BIGINT) AS kept_probe{k_col}
     FROM assigned a LEFT JOIN dropped d ON a.vec_id = d.vec_id
     GROUP BY a.centroid_id
-    """,
+    """
+
+
+@register(
+    "q182_semdedup",
+    _semdedup_oracle(8),
     doc="SemDeDup-style semantic deduplication (Abbas et al. 2023): cluster "
     "every embedding to its nearest of 8 fixed centroids (the shared q55 "
     "IVF assignment), then WITHIN each cluster drop any vector whose "
@@ -1882,14 +2088,6 @@ def q189_sketch_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _NOISE_K = 10
-
-# q199/q200's derived centroid count: the IVF sqrt(n) rule as SQL model
-# state. CEIL(SQRT(n)) is portable — sqrt of an exactly-representable
-# bigint is correctly rounded on both engines, so the ceil agrees.
-_K_AUTO_SQL = (
-    "SELECT CAST(CEIL(SQRT(COUNT(*))) AS BIGINT) AS k_auto FROM embeddings"
-)
-
 
 def _label_noise_oracle(n_centroids: int | str, derived_k: bool = False) -> str:
     """q191/q197/q200 oracle with a parametric centroid cutoff — the SQL
@@ -2271,27 +2469,7 @@ _SEMDEDUP_K = 32
 
 @register(
     "q196_semdedup_scaled",
-    f"""
-    WITH cent AS (
-        SELECT vec_id AS centroid_id, embedding AS c_emb FROM embeddings
-        WHERE vec_id < {_SEMDEDUP_K}
-    ), assigned AS (
-        SELECT vec_id, embedding, centroid_id FROM (
-            {_IVF_ASSIGN_SQL.replace("{SRC}", "embeddings")}
-        ) WHERE rn = 1
-    ), dropped AS (
-        SELECT DISTINCT a.vec_id
-        FROM assigned a JOIN assigned b
-          ON a.centroid_id = b.centroid_id AND b.vec_id < a.vec_id
-        WHERE {_SEMDEDUP_COS_SQL} >= {_SEMDEDUP_TAU}
-    )
-    SELECT a.centroid_id,
-           CAST(COUNT(*) AS BIGINT) AS n_members,
-           CAST(SUM(CASE WHEN d.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped,
-           CAST(SUM(CASE WHEN d.vec_id IS NULL THEN a.vec_id ELSE 0 END) AS BIGINT) AS kept_probe
-    FROM assigned a LEFT JOIN dropped d ON a.vec_id = d.vec_id
-    GROUP BY a.centroid_id
-    """,
+    _semdedup_oracle(_SEMDEDUP_K),
     doc=f"q182's semantic dedup with the scale knob TURNED: "
     f"{_SEMDEDUP_K} centroids instead of 8, quartering the "
     "within-cluster pair work (cost ~n²/K — SCALE.md's round-7 table "
@@ -2374,29 +2552,7 @@ def _derived_k_centroids(e: DataFrame) -> tuple[DataFrame, DataFrame]:
 
 @register(
     "q199_semdedup_auto",
-    f"""
-    WITH kval AS ({_K_AUTO_SQL}),
-    cent AS (
-        SELECT vec_id AS centroid_id, embedding AS c_emb FROM embeddings, kval
-        WHERE vec_id < k_auto
-    ), assigned AS (
-        SELECT vec_id, embedding, centroid_id FROM (
-            {_IVF_ASSIGN_SQL.replace("{SRC}", "embeddings")}
-        ) WHERE rn = 1
-    ), dropped AS (
-        SELECT DISTINCT a.vec_id
-        FROM assigned a JOIN assigned b
-          ON a.centroid_id = b.centroid_id AND b.vec_id < a.vec_id
-        WHERE {_SEMDEDUP_COS_SQL} >= {_SEMDEDUP_TAU}
-    )
-    SELECT a.centroid_id,
-           CAST(COUNT(*) AS BIGINT) AS n_members,
-           CAST(SUM(CASE WHEN d.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped,
-           CAST(SUM(CASE WHEN d.vec_id IS NULL THEN a.vec_id ELSE 0 END) AS BIGINT) AS kept_probe,
-           (SELECT k_auto FROM kval) AS derived_k
-    FROM assigned a LEFT JOIN dropped d ON a.vec_id = d.vec_id
-    GROUP BY a.centroid_id
-    """,
+    _semdedup_oracle("k_auto", derived_k=True),
     doc="q196's SemDeDup with the LAST fixed scale-knob removed: K is no "
     "longer a constant but ceil(sqrt(n)) computed from the corpus inside "
     "the plan (one count aggregation, broadcast into the centroid "
@@ -2753,38 +2909,10 @@ def _q215_parts(
     cost, sampled in production)."""
     e = T(spark, sf_dir, "embeddings")
     cent = ivf_centroids(e)
-    cand = ivf_assign(e.filter(F.col("vec_id") >= 16), cent, keep=1).drop("d2")
-    probes_all = ivf_assign(
-        e.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16)),
-        cent,
-        keep=max(_RECALL_NPROBES),
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        "centroid_id",
-        F.row_number()
-        .over(
-            Window.partitionBy("vec_id").orderBy(
-                F.col("d2"), F.col("centroid_id")
-            )
-        )
-        .alias("rn"),
-    )
+    cand = ivf_assign(corpus_slice(e), cent, keep=1).drop("d2")
+    probes_all = probe_batch(e, cent, max(_RECALL_NPROBES), rank="rn")
     queries = probes_all.filter(F.col("rn") == 1).select("query_id", "q_emb")
-    cos = dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt(sq_norm(F.col("q_emb"))) * F.sqrt(sq_norm(F.col("embedding")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    exact = (
-        e.filter(F.col("vec_id") >= 16)
-        .crossJoin(F.broadcast(queries))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine"))
-        .select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= _RECALL_K)
-        .select("query_id", "neighbor_id")
-    )
+    exact = brute_truth(corpus_slice(e), queries, _RECALL_K)
     scored = (
         cand.join(
             F.broadcast(
@@ -2802,7 +2930,7 @@ def _q215_parts(
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            cos.alias("cosine"),
+            cosine().alias("cosine"),
             "probe_rank",
         )
     )
@@ -2836,19 +2964,15 @@ def q215_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored, exact, queries = _q215_parts(spark, sf_dir)
     scored = scored.localCheckpoint()
     exact = exact.localCheckpoint()
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
     ivf_parts = []
     for np_ in _RECALL_NPROBES:
         ivf_parts.append(
-            scored.filter(F.col("probe_rank") <= np_)
-            .select("query_id", "neighbor_id", "cosine")
-            .select("*", F.row_number().over(w).alias("rank"))
-            .filter(F.col("rank") <= _RECALL_K)
-            .select(
-                F.lit(np_).alias("nprobe"), "query_id", "neighbor_id"
-            )
+            topk(
+                scored.filter(F.col("probe_rank") <= np_).select(
+                    "query_id", "neighbor_id", "cosine"
+                ),
+                _RECALL_K,
+            ).select(F.lit(np_).alias("nprobe"), "query_id", "neighbor_id")
         )
     ivf = ivf_parts[0]
     for part in ivf_parts[1:]:
@@ -3584,8 +3708,8 @@ def _pq_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared PQ/ADC stages (q240/q241): codebook -> encode -> LUT ->
     ADC scan. Returns (query_id, neighbor_id, adc)."""
     e = T(spark, sf_dir, "embeddings")
-    corpus = e.filter(F.col("vec_id") >= 16)
-    qset = e.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16))
+    corpus = corpus_slice(e)
+    qset = query_slice(e)
     # codebook: a deterministic corpus sample's subvectors (16 codewords
     # per subspace), broadcast everywhere — K x M x 8 doubles of model state
     cb = (
@@ -3679,43 +3803,14 @@ def _pq_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q240_pq_adc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = T(spark, sf_dir, "embeddings")
-    corpus = e.filter(F.col("vec_id") >= 16)
-    qset = e.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16))
-    scores = _pq_scores(spark, sf_dir)
-    ws = Window.partitionBy("query_id").orderBy(
-        F.col("adc").desc(), F.col("neighbor_id")
+    return shortlist_rescore(
+        _pq_scores(spark, sf_dir),
+        corpus_slice(e),
+        query_vectors(e),
+        _PQ_SHORTLIST,
+        _IVF_TOPK,
     )
-    short = (
-        scores.select("*", F.row_number().over(ws).alias("srn"))
-        .filter(F.col("srn") <= _PQ_SHORTLIST)
-        .drop("srn")
-    )
-    # exact rescore over the shortlist only (q232's refine contract)
-    resc = (
-        corpus.select(F.col("vec_id").alias("neighbor_id"), "embedding")
-        .join(F.broadcast(short), "neighbor_id")
-        .join(
-            F.broadcast(
-                qset.select(
-                    F.col("vec_id").alias("query_id"),
-                    F.col("embedding").alias("q_emb"),
-                )
-            ),
-            "query_id",
-        )
-    )
-    cos = dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt(sq_norm(F.col("q_emb"))) * F.sqrt(sq_norm(F.col("embedding")))
-    )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        resc.select("query_id", "neighbor_id", "adc", cos.alias("cosine"))
-        .select("*", F.row_number().over(wr).alias("rank"))
-        .filter(F.col("rank") <= _IVF_TOPK)
-        .orderBy("query_id", "rank")
-    )
+
 
 
 # -- q241: PQ shortlist-depth sweep — recall/cost per rescore budget ----------
@@ -3807,76 +3902,17 @@ def _pq_sweep_oracle() -> str:
 )
 def q241_pq_shortlist_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = T(spark, sf_dir, "embeddings")
-    corpus = e.filter(F.col("vec_id") >= 16)
-    qset = e.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16))
+    queries = query_vectors(e)
     # ADC scores via q240's stages (codebook/encode/LUT/scan)
-    scores = _pq_scores(spark, sf_dir)
-    ws = Window.partitionBy("query_id").orderBy(
-        F.col("adc").desc(), F.col("neighbor_id")
-    )
-    ranked = scores.select(
-        "query_id", "neighbor_id", F.row_number().over(ws).alias("srn")
-    ).filter(F.col("srn") <= max(_PQ_SWEEP_DEPTHS))
-    cos = dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt(sq_norm(F.col("q_emb"))) * F.sqrt(sq_norm(F.col("embedding")))
-    )
-    q_emb = F.broadcast(
-        qset.select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-        )
-    )
+    ranked = topk(
+        _pq_scores(spark, sf_dir), max(_PQ_SWEEP_DEPTHS), score="adc", rank="srn"
+    ).select("query_id", "neighbor_id", "srn")
     rescored = (
-        corpus.select(F.col("vec_id").alias("neighbor_id"), "embedding")
-        .join(F.broadcast(ranked), "neighbor_id")
-        .join(q_emb, "query_id")
-        .select("query_id", "neighbor_id", "srn", cos.alias("cosine"))
+        float_pull(corpus_slice(e), ranked, queries)
+        .select("query_id", "neighbor_id", "srn", cosine().alias("cosine"))
         .localCheckpoint()  # two consumers: cost aggregate + arank window
     )
     # truth arm: brute-force exact top-k (queries broadcast into the scan)
-    wt = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    truth = (
-        corpus.select(F.col("vec_id").alias("neighbor_id"), "embedding")
-        .crossJoin(q_emb)
-        .select("query_id", "neighbor_id", cos.alias("cosine"))
-        .select("*", F.row_number().over(wt).alias("xr"))
-        .filter(F.col("xr") <= _IVF_TOPK)
-        .select("query_id", "neighbor_id", F.lit(True).alias("is_true"))
-    )
-    fan = rescored.withColumn(
-        "shortlist",
-        F.explode(F.array(*[F.lit(d) for d in _PQ_SWEEP_DEPTHS])),
-    ).filter(F.col("srn") <= F.col("shortlist"))
-    cost = fan.groupBy("shortlist").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_rescored"),
-        F.countDistinct("query_id").cast("bigint").alias("n_queries"),
-    )
-    wa = Window.partitionBy("shortlist", "query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    approx = fan.select(
-        "shortlist",
-        "query_id",
-        "neighbor_id",
-        F.row_number().over(wa).alias("arank"),
-    ).filter(F.col("arank") <= _IVF_TOPK)
-    hits = (
-        approx.join(F.broadcast(truth), ["query_id", "neighbor_id"], "left")
-        .groupBy("shortlist")
-        .agg(F.count("is_true").cast("bigint").alias("hits"))
-    )
-    return (
-        cost.join(hits, "shortlist")
-        .select(
-            "shortlist",
-            "n_queries",
-            "n_rescored",
-            "hits",
-            (
-                F.col("hits").cast("double")
-                / (F.col("n_queries").cast("double") * F.lit(_IVF_TOPK))
-            ).alias("recall_at_k"),
-        )
-        .orderBy("shortlist")
-    )
+    keyed = corpus_slice(e).select(F.col("vec_id").alias("neighbor_id"), "embedding")
+    truth = brute_truth(keyed, queries, _IVF_TOPK, rank="xr", neighbor="neighbor_id")
+    return shortlist_sweep(rescored, truth, _PQ_SWEEP_DEPTHS, _IVF_TOPK)

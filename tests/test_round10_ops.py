@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import functions as F
 
+from etl_entregas_pyspark_spark.queries.relational import store_path
+
 
 # ---------------------------------------------------------------------------
 # q210 — persisted standing band index probe
@@ -53,7 +55,7 @@ def test_band_index_built_once_and_reused(spark, sf_dir):
     from etl_entregas_pyspark_spark.queries import lsh_index
 
     lsh_index.q210_incremental_lsh_probe_persisted(spark, sf_dir).count()
-    path = lsh_index._index_path(spark, sf_dir)
+    path = store_path(spark, sf_dir, "lsh_band_index")
     marker = os.path.join(path, "_SUCCESS")
     assert os.path.exists(marker)
     builds_before = lsh_index.INDEX_BUILDS.get(path)
@@ -334,7 +336,7 @@ def test_reconcile_flags_orphans_and_missing(spark, sf_dir, tmp_path):
     }
     assert set(healthy) == {"ok"} and healthy["ok"] > 0
     # corrupt: append a batch doc's bands (never part of the standing set)
-    path = lsh_index._index_path(spark, sf_dir)
+    path = store_path(spark, sf_dir, "lsh_band_index")
     orphan = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .filter(F.col("doc_id") % _BATCH_MOD == 0)

@@ -15,6 +15,8 @@ import os
 
 from pyspark.sql import functions as F
 
+from etl_entregas_pyspark_spark.queries.relational import store_path
+
 
 def _rows(df, cols):
     return sorted(
@@ -34,15 +36,12 @@ def _rows(df, cols):
 def test_ingest_commit_idempotent(spark, sf_dir):
     """Two runs in one session: the second must neither re-seed nor
     re-append (epoch fencing) and must emit the identical summary."""
-    from etl_entregas_pyspark_spark.queries.lsh_index import (
-        _commit_store_path,
-        q221_ingest_commit,
-    )
+    from etl_entregas_pyspark_spark.queries.lsh_index import q221_ingest_commit
     from etl_entregas_pyspark_spark.streaming.upsert_sink import _read_pointer
 
     cols = ["metric", "n_docs"]
     first = _rows(q221_ingest_commit(spark, sf_dir), cols)
-    store = _commit_store_path(spark, sf_dir)
+    store = store_path(spark, sf_dir, "lsh_commit_store")
     ptr_before = _read_pointer(store)
     epoch_dir = os.path.join(store, "epoch=1")
     mtime_before = max(
@@ -64,7 +63,6 @@ def test_ingest_commit_epoch_holds_exactly_the_keepers(spark, sf_dir):
     shingle-able keepers of q211's routing — nothing dropped, nothing
     extra — and the summary's after-count must equal the store's."""
     from etl_entregas_pyspark_spark.queries.lsh_index import (
-        _commit_store_path,
         band_signatures,
         q211_ingest_apply,
         q221_ingest_commit,
@@ -75,7 +73,7 @@ def test_ingest_commit_epoch_holds_exactly_the_keepers(spark, sf_dir):
         r["metric"]: r["n_docs"]
         for r in q221_ingest_commit(spark, sf_dir).collect()
     }
-    store = _commit_store_path(spark, sf_dir)
+    store = store_path(spark, sf_dir, "lsh_commit_store")
     committed = spark.read.parquet(os.path.join(store, "epoch=1"))
 
     keepers = (
@@ -340,7 +338,7 @@ def test_ivf_index_built_once_with_bucket_layout(spark, sf_dir):
     from etl_entregas_pyspark_spark.queries import ivf_index
 
     ivf_index.q223_ivf_probe_persisted(spark, sf_dir).count()
-    path = ivf_index._ivf_index_path(spark, sf_dir)
+    path = store_path(spark, sf_dir, "ivf_index")
     builds_before = ivf_index.IVF_INDEX_BUILDS.get(path)
     ivf_index.q223_ivf_probe_persisted(spark, sf_dir).count()
     assert ivf_index.IVF_INDEX_BUILDS.get(path) == builds_before == 1
@@ -375,6 +373,33 @@ def test_ivf_probe_plan_is_partition_pruned(spark, sf_dir):
     assert "embeddings.parquet" not in plan
 
 
+def test_cosine_topk_breaks_ties_by_neighbor_id_and_keeps_short_groups(spark):
+    """The shared exact-cosine top-k every IVF probe ranks with: tied
+    cosines rank by neighbor_id ascending, a query keeps exactly k rows,
+    and a query with fewer than k candidates keeps all of them — cases
+    the small generated vectors may never produce."""
+    from etl_entregas_pyspark_spark.queries.similarity import cosine_topk
+
+    q = [1.0, 0.0]
+    pairs = spark.createDataFrame(
+        [
+            (1, q, 9, [2.0, 0.0]),  # cosine 1.0
+            (1, q, 4, [1.0, 0.0]),  # cosine 1.0, tied
+            (1, q, 6, [3.0, 0.0]),  # cosine 1.0, tied
+            (1, q, 2, [0.0, 1.0]),  # cosine 0.0
+            (2, q, 8, [1.0, 1.0]),  # the only candidate of query 2
+        ],
+        "query_id long, q_emb array<float>, vec_id long, embedding array<float>",
+    )
+    got = cosine_topk(pairs, 2).orderBy("query_id", "rank").collect()
+    assert [(r.query_id, r.neighbor_id, r.rank) for r in got] == [
+        (1, 4, 1),
+        (1, 6, 2),
+        (2, 8, 1),
+    ]
+    assert got[0].cosine == got[1].cosine == 1.0
+
+
 # ---------------------------------------------------------------------------
 # q224/q225 — vector-side ingest commit + integrity audit
 # ---------------------------------------------------------------------------
@@ -386,7 +411,6 @@ def test_ivf_commit_idempotent_and_matches_recompute(spark, sf_dir):
     assignment of each slice against the same centroids."""
     from etl_entregas_pyspark_spark.queries.ivf_index import (
         _VEC_BATCH_MOD,
-        _ivf_store_path,
         ensure_ivf_commit,
         ensure_ivf_index,
         q224_ivf_ingest_commit,
@@ -396,7 +420,7 @@ def test_ivf_commit_idempotent_and_matches_recompute(spark, sf_dir):
     from etl_entregas_pyspark_spark.streaming.upsert_sink import _read_pointer
 
     first = _rows(q224_ivf_ingest_commit(spark, sf_dir), ["centroid_id", "n_standing", "n_added", "n_after"])
-    store = _ivf_store_path(spark, sf_dir)
+    store = store_path(spark, sf_dir, "ivf_store")
     ptr_before = _read_pointer(store)
     second = _rows(q224_ivf_ingest_commit(spark, sf_dir), ["centroid_id", "n_standing", "n_added", "n_after"])
     assert first == second

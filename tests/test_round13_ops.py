@@ -20,6 +20,7 @@ from etl_entregas_pyspark_spark.queries.ivf_index import (
     q230_ivf_nprobe_sweep,
     q231_ivf_centroid_refresh,
 )
+from etl_entregas_pyspark_spark.queries.relational import store_path
 from etl_entregas_pyspark_spark.streaming.epoch_store import (
     EpochStore,
     read_pointer,
@@ -160,13 +161,12 @@ class TestQ232Sq8Rescore:
     def test_probe_does_not_rebuild_index_and_is_deterministic(self, spark):
         from etl_entregas_pyspark_spark.queries.ivf_index import (
             IVF_INDEX_BUILDS,
-            _ivf_index_path,
             ensure_ivf_index,
             q232_ivf_sq8_rescore,
         )
 
         ensure_ivf_index(spark, SF_DIR)
-        path = _ivf_index_path(spark, SF_DIR)
+        path = store_path(spark, SF_DIR, "ivf_index")
         builds = IVF_INDEX_BUILDS.get(path, 0)
         a = sorted(map(tuple, q232_ivf_sq8_rescore(spark, SF_DIR).collect()))
         b = sorted(map(tuple, q232_ivf_sq8_rescore(spark, SF_DIR).collect()))
@@ -389,13 +389,12 @@ class TestQ235ReplanFromSignatures:
         build counter untouched."""
         from etl_entregas_pyspark_spark.queries.lsh_index import (
             SIG_STORE_BUILDS,
-            _sig_store_path,
             ensure_signature_store,
             q235_lsh_replan_from_signatures,
         )
 
         ensure_signature_store(spark, SF_DIR)
-        path = _sig_store_path(spark, SF_DIR)
+        path = store_path(spark, SF_DIR, "lsh_sig_store")
         builds = SIG_STORE_BUILDS.get(path, 0)
         a = sorted(map(tuple, q235_lsh_replan_from_signatures(spark, SF_DIR).collect()))
         b = sorted(map(tuple, q235_lsh_replan_from_signatures(spark, SF_DIR).collect()))

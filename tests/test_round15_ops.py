@@ -17,6 +17,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from etl_entregas_pyspark_spark.queries.relational import store_path
 from tests.conftest import SF_DIR
 
 
@@ -44,12 +45,11 @@ class TestIvfpqLifecycle:
     def test_q249_refresh_never_rebuilds_on_reprobe(self, spark):
         from etl_entregas_pyspark_spark.queries.ivf_index import (
             IVFPQ_REFRESH_BUILDS,
-            _ivfpq_refresh_path,
             q249_ivfpq_refresh_apply,
         )
 
         q249_ivfpq_refresh_apply(spark, SF_DIR).collect()
-        path = _ivfpq_refresh_path(spark, SF_DIR)
+        path = store_path(spark, SF_DIR, "ivfpq_refresh")
         builds = IVFPQ_REFRESH_BUILDS.get(path, 0)
         rows = q249_ivfpq_refresh_apply(spark, SF_DIR).collect()
         assert IVFPQ_REFRESH_BUILDS.get(path, 0) == builds
